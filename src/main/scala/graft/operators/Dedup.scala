@@ -26,22 +26,25 @@ object Dedup {
     * order is unspecified (SURVEY.md §7.4.2); we fix a total order with an
     * explicit tiebreak column.
     *
-    * Scale: rows with null/empty keys are split off BEFORE the window
-    * shuffle — at 100 TB the null-DOI population is the single hottest key
-    * and would skew one reducer; exempting it (required by reference
-    * semantics anyway) removes the skew source entirely. The remaining
-    * window shuffle partitions by `key`, which is high-cardinality.
+    * Scale: one window over one scan of the input. The window partitions
+    * by two expressions, `when(keyed, key)` and `when(!keyed, tiebreak)`:
+    * keyed rows group by key alone (the second expression is null for
+    * them), and each keyless row is spread by its tiebreak (the first is
+    * null), so the null/empty-key population — at 100 TB the single
+    * hottest key — never lands on one reducer. Keyless rows are all kept
+    * (reference semantics) whatever their rank, so rows sharing a
+    * tiebreak value, or a null one, still all survive. The shuffle key
+    * is high-cardinality on both sides. Splitting the input into a keyed
+    * and a keyless branch and unioning them would read the input twice.
     */
   def priorityDedup(df: DataFrame, key: Column, priority: Column,
                     tiebreak: Column): DataFrame = {
-    val keyed   = df.where(key.isNotNull && key =!= "")
-    val keyless = df.where(key.isNull || key === "")
-    val w = Window.partitionBy(key).orderBy(priority.desc, tiebreak.asc)
-    keyed
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
+    val keyed = key.isNotNull && key =!= ""
+    val w = Window.partitionBy(when(keyed, key), when(!keyed, tiebreak))
+      .orderBy(priority.desc, tiebreak.asc)
+    df.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") === 1 || !keyed)
       .drop("__rn")
-      .unionByName(keyless)
   }
 
   /** Exact dedup by normalized-content hash: one survivor (min id) per
@@ -980,7 +983,8 @@ object Dedup {
     * (totals 42.8/38.8 s vs 27.9/30.4 s) — per-task work at this
     * corpus size is milliseconds, so extra tasks are pure scheduling
     * overhead, and the r12 32-core anti-scaling traced to the
-    * unpinned-heap GC pathology (see build.sbt/-Xms), not to the
+    * unpinned-heap GC pathology (OPTIMIZATION_r13.md: G1 uncommits the
+    * heap after each full GC; `build.sbt` sets `-Xmx` only), not to the
     * missing slack. Results are factor-independent: every consumer is
     * keyed, and per-key fold order is placement-independent. */
   private[graft] def workParallelism(

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,7 +11,7 @@ import graft.functions.JsonRepair
   * reference whose values come from outside the data:
   *
   *   X1 journal-metrics enrichment (`journal_metrics.py`): distinct-key
-  *      fetch with throttle + memo cache, broadcast-joined back.
+  *      fetch (optionally throttled + retried), broadcast-joined back.
   *   X2 per-row LLM extraction (`llm_api.py`): per-abstract completion,
   *      bounded concurrency, retries, JSON-repair of the response.
   *
@@ -22,7 +23,9 @@ import graft.functions.JsonRepair
   *
   * Scale: X1 hits the service once per DISTINCT key (semi-join reduction,
   * same trick as the reference `main.py:369-371`), then broadcasts the tiny
-  * metrics dim back onto the fact table. X2 is a straight map over rows —
+  * metrics dim back onto the fact table. Both operators only build plan
+  * nodes: no Spark job runs until the caller's action, so the enrichment
+  * is part of the sink's one plan. X2 is a straight map over rows —
   * throughput scales with partitions; throttling is per-partition
   * token-bucket so cluster-wide rate = partitions × bucket rate.
   */
@@ -45,11 +48,15 @@ object Enrich {
   }
 
   /** X1 — journal-metrics enrichment.
-    * distinct(journal_norm) → mapPartitions(fetch) → broadcast left join.
+    * distinct(journal_norm) → mapPartitions(fetch) → broadcast left join,
+    * all inside one lazy plan: the metrics dim is a typed `mapPartitions`
+    * over the distinct keys, so building the result runs no Spark job
+    * (a `.rdd` hop would execute the distinct shuffle, and under
+    * adaptive execution every shuffle upstream of it, at call time).
+    * The fetch runs when the caller's action runs, once per distinct key.
     */
   def journalMetrics(df: DataFrame, journalCol: String,
                      client: MetricsClient): DataFrame = {
-    val spark = df.sparkSession
     val keyDf = df.select(lower(trim(col(journalCol))).as("journal_norm"))
       .where(col("journal_norm").isNotNull && col("journal_norm") =!= "")
       .distinct()
@@ -57,7 +64,7 @@ object Enrich {
       StructField("journal_norm", StringType),
       StructField("impact_factor", DoubleType),
       StructField("quartile", StringType)))
-    val metricsRdd = keyDf.rdd.mapPartitions { it =>
+    val metricsDim = keyDf.mapPartitions { it =>
       // per-partition client lifecycle lives here (HTTP pool, throttle);
       // the stub is pure so nothing to manage
       it.map { r =>
@@ -65,8 +72,7 @@ object Enrich {
         val (ifact, q) = client.fetch(j)
         Row(j, ifact, q)
       }
-    }
-    val metricsDim = spark.createDataFrame(metricsRdd, schema)
+    }(RowEncoder.encoderFor(schema))
     // journal_norm is a DOCUMENTED output column (the normalized join
     // key downstream dedup/reporting reads); a pre-existing one would
     // be silently clobbered, so refuse it loudly
@@ -169,8 +175,7 @@ object Enrich {
     val textIdx = df.schema.fieldIndex(textCol)
     val outSchema = StructType(df.schema.fields ++
       fields.map(f => StructField(f, StringType)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(outSchema)
+    val enc = RowEncoder.encoderFor(outSchema)
     val dflt = fields.map(f => f -> defaults.getOrElse(f, "")).toMap
     df.mapPartitions { it =>
       // per-partition client lifecycle: a production impl opens its HTTP

@@ -101,17 +101,20 @@ object BibSources {
   private def blankLineSep(spark: SparkSession, path: String): String =
     if (usesCrlf(spark, path)) "\r\n\r\n" else "\n\n"
 
-  /** Splittable segmented read: one string per delimited record. */
-  def readRecords(spark: SparkSession, path: String,
-                  delimiter: String): DataFrame = {
+  /** Splittable segmented read, one `parse` call per delimited record.
+    * The records go straight from the Hadoop read into the parser, with
+    * no DataFrame in between, and the parsed rows are one leaf of the
+    * caller's plan. */
+  private def parseRecords(spark: SparkSession, path: String,
+                           delimiter: String)
+                          (parse: String => Option[Row]): DataFrame = {
     val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
     conf.set("textinputformat.record.delimiter", delimiter)
-    val rdd = spark.sparkContext
+    val records = spark.sparkContext
       .newAPIHadoopFile(path, classOf[TextInputFormat],
         classOf[LongWritable], classOf[Text], conf)
       .map(_._2.toString)
-    spark.createDataFrame(rdd.map(Row(_)),
-      StructType(Seq(StructField("record", StringType))))
+    spark.createDataFrame(records.flatMap(parse), schema)
   }
 
   // ---- S1: PubMed tagged text ----------------------------------------------
@@ -176,9 +179,7 @@ object BibSources {
   /** S1 — records separated by blank lines; splittable via the file's
     * own blank-line convention (LF or CRLF). */
   def pubmed(spark: SparkSession, path: String): DataFrame = {
-    val rdd = readRecords(spark, path, blankLineSep(spark, path)).rdd
-      .flatMap(r => parsePubmedRecord(r.getString(0)))
-    spark.createDataFrame(rdd, schema)
+    parseRecords(spark, path, blankLineSep(spark, path))(parsePubmedRecord)
   }
 
   // ---- S2: WOS tagged text --------------------------------------------------
@@ -234,9 +235,7 @@ object BibSources {
     * (CRLF exports split on `\r\nER`). */
   def wos(spark: SparkSession, path: String): DataFrame = {
     val sep = if (usesCrlf(spark, path)) "\r\nER" else "\nER"
-    val rdd = readRecords(spark, path, sep).rdd
-      .flatMap(r => parseWosRecord(r.getString(0)))
-    spark.createDataFrame(rdd, schema)
+    parseRecords(spark, path, sep)(parseWosRecord)
   }
 
   /** S3 — WOS CSV export: plain DataFrameReader with explicit dialect
@@ -367,9 +366,7 @@ object BibSources {
 
   /** S5 — entries separated by blank-line runs (LF or CRLF). */
   def sciencedirect(spark: SparkSession, path: String): DataFrame = {
-    val rdd = readRecords(spark, path, blankLineSep(spark, path)).rdd
-      .flatMap(r => parseSdEntry(r.getString(0)))
-    spark.createDataFrame(rdd, schema)
+    parseRecords(spark, path, blankLineSep(spark, path))(parseSdEntry)
   }
 
   // ---- S6: dispatch + U1 union ------------------------------------------------

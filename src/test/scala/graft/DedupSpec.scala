@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Normalize
 import graft.operators.Dedup
+import graft.sources.BibSources
 
 /** A3 priority dedup edge cases (reference main.py:101-166) and the
   * near-dup family's exactness properties on small literal corpora. */
@@ -39,6 +41,41 @@ class DedupSpec extends SparkTestBase {
       .groupBy("doi").agg(max("prio").as("mx"))
     val bad = out.join(maxByKey, "doi").where(col("prio") =!= col("mx"))
     assert(bad.count() === 0)
+  }
+
+  test("priorityDedup keeps every keyless row — null or \"\" key — that " +
+      "shares a tiebreak value or has a null one") {
+    val rows = Seq[(Long, String, Int, java.lang.Long)](
+      (1L, null, 1, 7L), (2L, null, 2, 7L), (3L, "", 1, 7L),  // shared tb
+      (4L, null, 1, null), (5L, "", 3, null), (6L, null, 3, null),
+      (10L, "", 2, 8L),                       // "" rows are not one key
+      (7L, "10.1/a", 1, null), (8L, "10.1/a", 2, null),     // keyed: one
+      (9L, "10.1/b", 1, 7L))
+      .toDF("id", "doi", "prio", "tb")
+    val out = Dedup.priorityDedup(rows, col("doi"), col("prio"), col("tb"))
+      .select("id").as[Long].collect().sorted
+    assert(out === Seq(1L, 2L, 3L, 4L, 5L, 6L, 8L, 9L, 10L))
+  }
+
+  test("priorityDedup scans its input once: the bibliographic pipeline " +
+      "reads each record as often as a plain scan of the union does") {
+    val fx = "fixtures" // relative to the project root, the forked JVM's cwd
+    val all = BibSources.combine(Seq(
+      BibSources.pubmed(spark, s"$fx/pubmed_sample.txt"),
+      BibSources.wos(spark, s"$fx/wos_sample.txt"),
+      BibSources.sciencedirect(spark, s"$fx/sciencedirect_sample.txt")))
+      .withColumn("doi_norm", Normalize.normalizeDoi(col("doi")))
+      .withColumn("prio", Normalize.sourcePriority(col("source_type")))
+      .withColumn("rid", xxhash64(col("source_type"), col("title"),
+        col("doi_norm"), col("pmid"), col("wos_id")))
+    val (rows, scan) = SparkEvents.during(spark)(all.collect())
+    val (kept, dedup) = SparkEvents.during(spark) {
+      Dedup.priorityDedup(all, col("doi_norm"), col("prio"), col("rid"))
+        .collect()
+    }
+    assert(rows.length === 6 && kept.length === 4)
+    assert(scan.recordsRead > 0)
+    assert(dedup.recordsRead === scan.recordsRead)
   }
 
   test("exactDedup groups identical normalized text") {

@@ -66,7 +66,13 @@ class EventsEnrichSpec extends SparkTestBase {
     val df = Seq(("a", "Journal One"), ("b", "journal one "),
       ("c", "Other"), ("d", null.asInstanceOf[String]))
       .toDF("id", "journal")
-    val out = Enrich.journalMetrics(df, "journal", CountingMetricsClient)
+    // building it runs no job and fetches nothing (the distinct shuffle
+    // stays in the plan): the caller's action evaluates the enrichment
+    val (out, built) = SparkEvents.during(spark) {
+      Enrich.journalMetrics(df, "journal", CountingMetricsClient)
+    }
+    assert(built.jobs === 0)
+    assert(CountingMetricsClient.calls.get() === 0)
     assert(out.count() === 4)
     // "Journal One" and "journal one " normalize to the same key
     assert(CountingMetricsClient.calls.get() === 2)
